@@ -403,8 +403,11 @@ object Bench {
     // a WARN emitted mid-line corrupts the one JSON line the driver parses
     // (the r19 artifact banked rc=0 yet "parsed": null).  With the context
     // stopped nothing else can write, and the explicit flush pins the line
-    // as the final output before sbt's own epilogue.
-    spark.stop()
+    // as the final output before sbt's own epilogue.  A failing stop is
+    // logged, never allowed to swallow the measured line.
+    try spark.stop()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] spark.stop() failed: $e") }
     println(line)
     System.out.flush()
   }

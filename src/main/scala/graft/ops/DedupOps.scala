@@ -569,16 +569,6 @@ object DedupOps {
         .withColumnRenamed("sz", "size_b"), Seq("doc_b"))
   }
 
-  /** Per-document MinHash signature: `numHashes` md5-family min-hashes over
-    * word-k-shingles.  Per-row scalar function (no shuffle); see
-    * [[signatureOf]] for the kernel and its oracle-parity contract. */
-  def minhashSignature(text: Column, k: Int = 3,
-      numHashes: Int = 16): Column = {
-    val f = udf((t: String) =>
-      if (t == null) null else signatureOf(t, k, numHashes))
-    f(text)
-  }
-
   /** LSH banding: (doc_id, band, band_key) — docs sharing a band_key in any
     * band are near-dup candidates.  `bands` rows per doc; one shuffle on
     * the bucket key finds candidates without a cross product.

@@ -80,10 +80,6 @@ object TextOps {
     "fr" -> Seq("le", "les", "des", "est", "dans", "pour"),
     "en" -> Seq("the", "and", "of", "is", "to", "in"))
 
-  /** Number of tokens that are members of `set`. */
-  def markerHits(toks: Column, set: Seq[String]): Column =
-    size(filter(toks, t => t.isin(set: _*)))
-
   private lazy val StopSet = Stopwords.toSet
   private lazy val MarkerSets: Array[Set[String]] =
     Markers.map(_._2.toSet).toArray
@@ -148,10 +144,6 @@ object TextOps {
     }
     f(text)
   }
-
-  /** Count of sentence-punctuation characters. */
-  def punctCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[.,!?;:]", ""))
 
   private val Stopwords =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "for", "on")

@@ -1225,6 +1225,31 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("simhash index append: write(A) + append(B) answers like write(A ∪ B)") {
+    val fox = "the quick brown fox jumps over the lazy dog"
+    val lorem = "lorem ipsum dolor sit amet consectetur adipiscing elit"
+    val a = Seq((0L, fox), (1L, "an unrelated first document about shipping"))
+      .toDF("doc_id", "text")
+    val b = Seq((2L, lorem), (3L, fox), (4L, "yet another unrelated text"))
+      .toDF("doc_id", "text")
+    val newShard = Seq((7L, fox), (8L, lorem), (9L, "nothing shared here"))
+      .toDF("doc_id", "text")
+    val appended = java.nio.file.Files.createTempDirectory("graft_sh_app").toString
+    DedupOps.simhashIndexWrite(a, col("text"), col("doc_id"), appended)
+    DedupOps.simhashIndexAppend(b, col("text"), col("doc_id"), appended)
+    val whole = java.nio.file.Files.createTempDirectory("graft_sh_all").toString
+    DedupOps.simhashIndexWrite(a.unionByName(b), col("text"), col("doc_id"), whole)
+    def pairs(idx: String) = DedupOps.simhashCandidatesAgainst(idx, newShard,
+      col("text"), col("doc_id")).as[(Long, Long, Long)].collect().toSet
+    val viaAppend = pairs(appended)
+    graft.core.CacheScope.release()
+    val viaWhole = pairs(whole)
+    graft.core.CacheScope.release()
+    assert(viaAppend == viaWhole)
+    // the appended shard is searched: pairs reach docs of both A and B
+    assert(Set((0L, 7L, 0L), (3L, 7L, 0L), (2L, 8L, 0L)).subsetOf(viaAppend))
+  }
+
   test("NB classifier: distinctive vocab wins; priors break vocab ties; model broadcasts") {
     val train = Seq(
       ("spam", "buy cheap pills now buy now"),

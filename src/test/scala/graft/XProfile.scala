@@ -23,7 +23,7 @@ object XProfile {
     // warm-up
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val c = t("open+rank+cache") {
-      val c = graft.queries.CoreQueries.li(spark, dir)
+      val c = graft.queries.SamplingQueries.li(spark, dir)
       c.df.count(); c
     }
     t("o3_replace_total") {
